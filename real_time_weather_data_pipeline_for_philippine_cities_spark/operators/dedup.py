@@ -21,8 +21,6 @@ has a ``*_sql`` twin emitting the equivalent DuckDB expression.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -432,7 +430,8 @@ def connected_components(
     adjacency against current labels + a min-aggregate; the convergence
     check is the round's own update count (a filter over the just-
     checkpointed result — no separate verification join). Lineage is
-    truncated with localCheckpoint every round so the plan stays flat.
+    truncated with ``session.materialize`` every round so the plan stays
+    flat.
     Rounds needed ≈ graph diameter; for adversarially deep graphs use
     ``connected_components_star`` (O(log d) rounds) or ``algorithm="auto"``
     on :func:`dedup_cluster_assign`, which falls back to it automatically.
@@ -453,8 +452,8 @@ def connected_components(
     # pipeline (the LSH band join) would execute twice inside the adj
     # checkpoint (measured ~1 s of the cluster-assign entry at sf0.1,
     # r10 — same pathology as pagerank's edges_deg fan-out).
-    a = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
-        eager=True
+    a = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).transform(
+        materialize
     )
     # Materialize the adjacency ONCE: every propagation round joins
     # against adj — without this, the union re-executes per round.
@@ -837,14 +836,8 @@ def _with_shingle_df(expl: DataFrame) -> DataFrame:
     the rarest shingles per doc, and the old shape's join probe moved the
     same exploded rows through the same h-exchange whenever the frequency
     table outgrew broadcast, paying the extra aggregate pass on top.
-    ``$SPARK_GRAFT_JACCARD_DF=join`` restores the groupBy+join form
-    (A/B hook; measured at sf0.1 AND sf1 before adoption).
+    Measured at sf0.1 AND sf1 before adoption.
     """
-    if os.environ.get("SPARK_GRAFT_JACCARD_DF", "window") == "join":
-        freq = expl.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-        return expl.join(freq, "h")
-    from pyspark.sql import Window
-
     return expl.withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy("h"))
     )
@@ -921,8 +914,6 @@ def ngram_jaccard_pairs(
     # hash join when the build side is big; tests/test_plan_shape.py pins
     # that the large-estimate form is NOT a broadcast.
     expl = base.select("doc_id", "bucket", "sz", F.explode("hs").alias("h"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("h").asc())
     prefix = (
         _with_shingle_df(expl)

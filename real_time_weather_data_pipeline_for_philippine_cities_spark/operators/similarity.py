@@ -20,7 +20,6 @@ are inlined into the DuckDB oracle (deterministic, seedless).
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -251,17 +250,13 @@ def lsh_buckets_col(
     per-dimension in ASCENDING index order (``acc += outer(V[:,d], P[:,d])``)
     — the identical IEEE op sequence to the sequential left fold both
     engines' SQL uses, the same oracle-proven pattern as the knn/ivf
-    kernels — and the bucket bit is ``dot > 0`` (NaN > 0 false on both
-    sides). Callers apply the finite/dim ingestion contract first; a
-    malformed row that bypasses it degrades to bucket 0 per table, exactly
-    the expression form's NULL-dot semantics, instead of crashing vstack.
-
-    ``$SPARK_GRAFT_LSH_KERNEL=expr`` keeps the interpreted expression form
-    (A/B hook; the default is the Arrow kernel).
+    kernels — and the bucket bit is ``dot > 0``. Parity holds for finite
+    vectors only: numpy's ``NaN > 0`` is false, while Spark SQL orders NaN
+    above every number. Callers apply the finite/dim ingestion contract
+    first; a null or wrong-length row that bypasses it degrades to bucket 0
+    per table, exactly the expression form's NULL-dot semantics, instead of
+    crashing vstack.
     """
-    if os.environ.get("SPARK_GRAFT_LSH_KERNEL", "arrow") == "expr":
-        return F.array(*[lsh_bucket_col(vec_col, tb) for tb in tables])
-
     from pyspark.sql.functions import pandas_udf
 
     n_tables = len(tables)

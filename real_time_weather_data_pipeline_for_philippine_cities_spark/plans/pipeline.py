@@ -13,8 +13,7 @@ injectable enrichment edges:
 Two deliberate improvements over the reference, each flagged:
   * geocode only changed/new rows and reuse cached coordinates for
     unchanged ones (the reference re-geocodes everything on any change —
-    wdf.py:405 vs the diff at wdf.py:387); ``full_regeocode=True`` restores
-    reference behavior for fidelity testing.
+    wdf.py:405 vs the diff at wdf.py:387).
   * dense surrogate keys are pinned to an explicit sort (name, province)
     instead of inherited row order (wdf.py:240).
 """
@@ -82,8 +81,6 @@ def geocode_locations(
     changes: DataFrame,
     old_snapshot: DataFrame | None,
     geocoder: Fetcher,
-    full_regeocode: bool = False,
-    rate_per_sec: float | None = None,
 ) -> DataFrame:
     """E1: attach latitude/longitude, fetching only what the diff requires.
 
@@ -95,10 +92,8 @@ def geocode_locations(
         list(merged.schema.fields)
         + [StructField("latitude", DoubleType()), StructField("longitude", DoubleType())]
     )
-    if full_regeocode or old_snapshot is None:
-        return enrich_map_in_pandas(
-            merged, geocoder, geo_schema, rate_per_sec=rate_per_sec, single_partition=True
-        )
+    if old_snapshot is None:
+        return enrich_map_in_pandas(merged, geocoder, geo_schema, single_partition=True)
 
     # Null-safe equality throughout: oldName is null for ~98% of rows
     # (SURVEY.md §1.2) and a plain `=` join would silently route every
@@ -118,9 +113,7 @@ def geocode_locations(
         "code_city",
         "left",
     )
-    fetched = enrich_map_in_pandas(
-        to_fetch, geocoder, geo_schema, rate_per_sec=rate_per_sec, single_partition=True
-    )
+    fetched = enrich_map_in_pandas(to_fetch, geocoder, geo_schema, single_partition=True)
     return fetched.unionByName(cached.select(*[f.name for f in geo_schema.fields]))
 
 
@@ -185,7 +178,6 @@ def run_pipeline(
     old_snapshot: DataFrame | None,
     geocoder: Fetcher,
     weather_fetcher: Fetcher,
-    full_regeocode: bool = False,
 ) -> PipelineResult:
     """main() (wdf.py:338-453) as a pure plan: no side effects — callers
     write locations_dim (overwrite) / observations (append) / new_snapshot
@@ -197,9 +189,7 @@ def run_pipeline(
         # No location drift: reuse snapshot, dim unchanged (wdf.py:399-401).
         snapshot = old_snapshot
     else:
-        snapshot = geocode_locations(
-            merged, changes, old_snapshot, geocoder, full_regeocode=full_regeocode
-        )
+        snapshot = geocode_locations(merged, changes, old_snapshot, geocoder)
     dim = build_locations_dim(snapshot)
     obs = ingest_weather(snapshot, dim, weather_fetcher)
     return PipelineResult(dim, obs, changes, snapshot)

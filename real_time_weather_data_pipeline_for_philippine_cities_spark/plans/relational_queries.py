@@ -9,6 +9,7 @@ windows, top-k per group — SURVEY.md §2.5).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,7 +27,6 @@ from ..functions.rounding import (
     quantize_double,
     round_div,
 )
-from ..session import persist_shared
 from .base import Q, finite, finite_pred, finite_spark_sql, finite_sql, t
 
 
@@ -242,9 +242,14 @@ def q_symmetric_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # each snapshot is probe of one anti-join and build of the other, so
     # the distinct shuffles ran twice per side (r11 audit: 4 scans, 0
-    # reused exchanges) — persist both distinct pair sets.
+    # reused exchanges) — persist both distinct pair sets (persist, not an
+    # eager checkpoint: the r10 sf1 measurements chose the in-memory
+    # columnar cache for corpus-scale shared stages, and a lazy cache lets
+    # the stages overlap in one job).
     return symmetric_difference(
-        persist_shared(new), persist_shared(old), ["partkey", "suppkey"]
+        new.persist(StorageLevel.MEMORY_AND_DISK),
+        old.persist(StorageLevel.MEMORY_AND_DISK),
+        ["partkey", "suppkey"],
     )
 
 

@@ -757,10 +757,7 @@ def q_dominant_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold `q * nsupp > 3 * tq` is unchanged (all-BIGINT, quantities
     integer-valued and cast before summing — exact on both engines; the
     DuckDB twin keeps the GROUP BY + join form and matches bitwise).
-    ``$SPARK_GRAFT_Q20_SHAPE=join`` restores the join form (A/B hook).
     """
-    import os as _os
-
     li = t(spark, sf_dir, "lineitem").select(
         # floor() on BOTH engines: a bare cast truncates in Spark but rounds in
         # DuckDB, so the integer contract would silently diverge on any
@@ -768,21 +765,12 @@ def q_dominant_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_suppkey", F.floor("l_quantity").cast("long").alias("qty")
     )
     per = li.groupBy("l_partkey", "l_suppkey").agg(F.sum("qty").alias("q"))
-    if _os.environ.get("SPARK_GRAFT_Q20_SHAPE", "window") == "join":
-        tot = per.groupBy("l_partkey").agg(
-            F.sum("q").alias("tq"), F.count(F.lit(1)).alias("nsupp")
-        )
-        dominated = (
-            per.join(tot, "l_partkey")
-            .filter(F.col("q") * F.col("nsupp") > F.lit(3) * F.col("tq"))
-        )
-    else:
-        wp = Window.partitionBy("l_partkey")
-        dominated = (
-            per.withColumn("tq", F.sum("q").over(wp))
-            .withColumn("nsupp", F.count(F.lit(1)).over(wp))
-            .filter(F.col("q") * F.col("nsupp") > F.lit(3) * F.col("tq"))
-        )
+    wp = Window.partitionBy("l_partkey")
+    dominated = (
+        per.withColumn("tq", F.sum("q").over(wp))
+        .withColumn("nsupp", F.count(F.lit(1)).over(wp))
+        .filter(F.col("q") * F.col("nsupp") > F.lit(3) * F.col("tq"))
+    )
     supp = t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         dominated.groupBy(F.col("l_suppkey").alias("s_suppkey"))

@@ -34,60 +34,52 @@ _RUNTIME_CONFS = {
     # (sources/registry.py) to microsecond timestamps, matching DuckDB's
     # µs truncation of the same files.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Per-query shuffle sizing is delegated to AQE: every shuffle STARTS at
+    # 256 pre-coalesce partitions and AQE merges down to its advisory byte
+    # size per exchange — tiny-lattice windows coalesce to a handful of
+    # tasks while pair-join heavies keep real parallelism, with no
+    # hand-tuned per-query partition counts (the 100 TB posture: initial =
+    # a few x total cores, coalesce does the rest). Measured at sf1 (70
+    # queries, 48g heap): 108.2 s at the flat 32 -> 96.5 s at 256, sf0.1
+    # neutral (52.6 vs 53.8 s); the one consistent loser is
+    # ivf_cosine_topk's collect-anchored training rounds (+2 s at sf1),
+    # dwarfed by the near_dup/simhash/ngram gains.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
+    # Shuffled-hash over sort-merge where a per-partition hash map fits
+    # (optimization guide §3.1/§9): SMJ pays a full sort of BOTH sides per
+    # join — in the iterative plans (pagerank, cluster-assign) that is a
+    # re-sort of the same static edge relation every round. Two gates,
+    # both size-conditioned so big⋈big joins keep sort-merge's graceful
+    # spill:
+    #   * planner: preferSortMergeJoin=false picks SHJ only when one side
+    #     is ≤ 1/3 of the other AND fits a local map (< broadcastThreshold
+    #     × shuffle partitions);
+    #   * AQE runtime: maxShuffledHashJoinLocalMapThreshold rewrites an
+    #     already-planned SMJ to SHJ when EVERY post-shuffle partition is
+    #     under the byte cap (set to the 64 MB advisory partition size — a
+    #     partition that coalesced to the advisory target builds a local
+    #     map of the same order; raise/lower with executor memory in
+    #     production).
+    # Interleaved A/B at sf0.1 (tools/confset_ab.py, min-of-3): heavies
+    # total 0.84× with zero losers above rep noise; mid-tier cohort 0.86×.
+    # AQE skew-split still applies to SHJ, so the skew posture is unchanged.
+    #
+    # Production risk note (r10 advice): the PLANNER gate decides from
+    # Catalyst size ESTIMATES (canBuildLocalHashMap ≈ stats < broadcast
+    # threshold × shuffle partitions), and an SHJ build map cannot spill —
+    # a badly underestimated side (exploded/UDF intermediates; see the
+    # 128 MB broadcast experiment in get_spark) becomes an executor OOM
+    # where SMJ would have spilled. The AQE rewrite below it uses MEASURED
+    # runtime partition sizes and carries part of the win without that
+    # hazard. Measured (r11, interleaved A/B with the AQE rewrite active
+    # in both arms): the planner gate alone is still 0.875× over the
+    # 8-query join cohort at sf0.1 (allpairs 0.76, asof_join 0.73), so it
+    # is NOT redundant with the AQE path — keep it locally; on a cluster
+    # with stale/absent stats flip preferSortMergeJoin back to true and
+    # keep the AQE threshold.
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(64 * 1024 * 1024),
 }
-
-# Per-query shuffle sizing is delegated to AQE: every shuffle STARTS at
-# 256 pre-coalesce partitions and AQE merges down to its advisory byte
-# size per exchange — tiny-lattice windows coalesce to a handful of tasks
-# while pair-join heavies keep real parallelism, with no hand-tuned
-# per-query partition counts (the 100 TB posture: initial = a few x total
-# cores, coalesce does the rest). Measured at sf1 (70 queries, 48g heap):
-# 108.2 s at the flat 32 -> 96.5 s at 256, sf0.1 neutral (52.6 vs 53.8 s);
-# the one consistent loser is ivf_cosine_topk's collect-anchored training
-# rounds (+2 s at sf1), dwarfed by the near_dup/simhash/ngram gains.
-# Override with $SPARK_GRAFT_INITIAL_PARTS (0/empty disables).
-_initial_parts = os.environ.get("SPARK_GRAFT_INITIAL_PARTS", "256")
-if _initial_parts and _initial_parts != "0":
-    _RUNTIME_CONFS[
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    ] = _initial_parts
-
-# Shuffled-hash over sort-merge where a per-partition hash map fits
-# (optimization guide §3.1/§9): SMJ pays a full sort of BOTH sides per
-# join — in the iterative plans (pagerank, cluster-assign) that is a
-# re-sort of the same static edge relation every round. Two gates, both
-# size-conditioned so big⋈big joins keep sort-merge's graceful spill:
-#   * planner: preferSortMergeJoin=false picks SHJ only when one side is
-#     ≤ 1/3 of the other AND fits a local map (< broadcastThreshold ×
-#     shuffle partitions);
-#   * AQE runtime: maxShuffledHashJoinLocalMapThreshold rewrites an
-#     already-planned SMJ to SHJ when EVERY post-shuffle partition is
-#     under the byte cap (set to the 64 MB advisory partition size — a
-#     partition that coalesced to the advisory target builds a local map
-#     of the same order; raise/lower with executor memory in production).
-# Interleaved A/B at sf0.1 (tools/confset_ab.py, min-of-3): heavies
-# total 0.84× with zero losers above rep noise; mid-tier cohort 0.86×.
-# AQE skew-split still applies to SHJ, so the skew posture is unchanged.
-# Override with $SPARK_GRAFT_SHJ_LOCALMAP (bytes; 0/empty disables both).
-#
-# Production risk note (r10 advice): the PLANNER gate decides from
-# Catalyst size ESTIMATES (canBuildLocalHashMap ≈ stats < broadcast
-# threshold × shuffle partitions), and an SHJ build map cannot spill —
-# a badly underestimated side (exploded/UDF intermediates; see the 128 MB
-# broadcast experiment above) becomes an executor OOM where SMJ would
-# have spilled. The AQE rewrite below it uses MEASURED runtime partition
-# sizes and carries part of the win without that hazard. Measured (r11,
-# interleaved A/B with the AQE rewrite active in both arms): the planner
-# gate alone is still 0.875× over the 8-query join cohort at sf0.1
-# (allpairs 0.76, asof_join 0.73), so it is NOT redundant with the AQE
-# path — keep it locally; on a cluster with stale/absent stats flip
-# preferSortMergeJoin back to true and keep the AQE threshold.
-_shj_localmap = os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", str(64 * 1024 * 1024))
-if _shj_localmap and _shj_localmap != "0":
-    _RUNTIME_CONFS["spark.sql.join.preferSortMergeJoin"] = "false"
-    _RUNTIME_CONFS[
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
-    ] = _shj_localmap
 
 
 #: application ids whose reliable checkpoint dir has been set (one UUID
@@ -134,30 +126,6 @@ def materialize(df, eager: bool = True):
     return df.localCheckpoint(eager=eager)
 
 
-def materialize_shared(df, eager: bool = True):
-    """:func:`materialize` for SMALL multi-consumer stages found by the
-    r11 duplicate-subtree audit (Catalyst re-executes a DataFrame's plan
-    once per reference; AQE exchange reuse measured 0 hits on these).
-    ``$SPARK_GRAFT_SHARED_MAT=off`` restores the recompute-per-consumer
-    plans (A/B hook; every adopted site was measured at sf0.1 AND sf1).
-    """
-    if os.environ.get("SPARK_GRAFT_SHARED_MAT", "on") == "off":
-        return df
-    return materialize(df, eager)
-
-
-def persist_shared(df):
-    """The persist() arm of the same audit — for CORPUS-SCALE shared
-    stages, where the r10 sf1 measurements chose the in-memory-columnar
-    cache over an eager checkpoint (lazy: stages overlap in one job).
-    Same ``$SPARK_GRAFT_SHARED_MAT=off`` hook."""
-    if os.environ.get("SPARK_GRAFT_SHARED_MAT", "on") == "off":
-        return df
-    from pyspark import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-provided session (idempotent)."""
     for k, v in _RUNTIME_CONFS.items():
@@ -172,8 +140,8 @@ def tune(spark: SparkSession) -> SparkSession:
 
 def get_spark(app_name: str = "rtw-spark", master: str | None = None) -> SparkSession:
     """Build a local session sized for the test harness (local[N], AQE on)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", "32")
@@ -191,8 +159,6 @@ def get_spark(app_name: str = "rtw-spark", master: str | None = None) -> SparkSe
         # reverted; AQE still upgrades to broadcast per-plan when the
         # runtime size estimate is genuinely small.
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .getOrCreate()
     )
-    for k, v in _RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     return tune(spark)

@@ -575,3 +575,67 @@ def test_knn_join_degenerate_inputs(spark):
 
     with pytest.raises(ValueError, match="exceeds the exact-path bound"):
         knn_join_exact(emb, k=1, n_blocks=2, dim=4, max_rows=2)
+
+
+def test_lsh_buckets_kernel_matches_expression_form(spark):
+    """The Arrow kernel behind lsh_buckets_col must give the same bucket
+    ids as the per-table expression form, row for row — including the
+    malformed rows the docstring promises degrade to bucket 0 per table
+    (a null vector and wrong-length vectors, both shorter and longer)."""
+    import random
+
+    dim, n_planes = 8, 4
+    tables = [S.lsh_planes(n_planes, dim, table=tb) for tb in range(3)]
+    rng = random.Random(11)
+    rows = [(i, [rng.uniform(-1.0, 1.0) for _ in range(dim)]) for i in range(200)]
+    rows += [
+        (1000, None),
+        (1001, [0.5] * (dim - 1)),
+        (1002, [0.5] * (dim + 1)),
+        (1003, [0.0] * dim),
+    ]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    out = df.select(
+        "id",
+        S.lsh_buckets_col("v", tables, dim).alias("kernel"),
+        F.array(*[S.lsh_bucket_col("v", tb) for tb in tables]).alias("expr"),
+    ).collect()
+    assert len(out) == len(rows)
+    for r in out:
+        assert list(r.kernel) == list(r.expr), r.id
+    by_id = {r.id: list(r.kernel) for r in out}
+    for bad in (1000, 1001, 1002, 1003):
+        assert by_id[bad] == [0, 0, 0], bad
+    # the random rows really spread over buckets, so the parity is not
+    # vacuously all-zero
+    assert len({tuple(by_id[i]) for i in range(200)}) > 10
+
+
+def test_connected_components_reliable_mode_never_local_checkpoints(
+    spark, monkeypatch
+):
+    """Under $SPARK_GRAFT_CHECKPOINT=reliable every lineage cut in
+    connected_components goes through session.materialize (a reliable
+    checkpoint) — no stage may fall back to executor-local blocks — and
+    the labels equal the default-mode labels."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (12, 11), (20, 21)],
+        "doc_a long, doc_b long",
+    )
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT", raising=False)
+    default = sorted(map(tuple, D.connected_components(edges).collect()))
+
+    def no_local_checkpoint(self, eager=True):  # noqa: ARG001
+        raise AssertionError("localCheckpoint called in reliable mode")
+
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", "reliable")
+    # patch the concrete class: pyspark.sql.DataFrame is only the base the
+    # classic (non-Connect) DataFrame overrides.
+    monkeypatch.setattr(type(edges), "localCheckpoint", no_local_checkpoint)
+    reliable = sorted(map(tuple, D.connected_components(edges).collect()))
+    assert reliable == default
+    assert default == [
+        (1, 1), (2, 1), (3, 1), (4, 1),
+        (10, 10), (11, 10), (12, 10),
+        (20, 20), (21, 20),
+    ]

@@ -3,8 +3,20 @@
 Usage:
     python tools/confset_ab.py '{"k":"v",...}' '{"k":"v",...}' [--reps N] q [q ...]
 
-NOTE: query construction (CATALOG[name].fn) runs eager localCheckpoint
-jobs and must stay inside the timed, conf-applied window — see conf_ab.py.
+A single-conf A/B is a one-key dict per arm, e.g.
+    python tools/confset_ab.py '{"spark.sql.shuffle.partitions":"32"}' \
+        '{"spark.sql.shuffle.partitions":"64"}' q1 q2
+A key missing from one arm keeps the session's default in that arm.
+
+Each rep runs every query twice — once under A, once under B, back to
+back — so a host-noise window inflates both arms almost equally. Prints
+per-query {A_min, B_min, ratio} and the total ratio.
+
+NOTE: CATALOG[name].fn(...) is called INSIDE the timed, conf-applied
+window — deliberately. Operators run eager localCheckpoint jobs at
+DataFrame-construction time, so construction must stay inside the
+interval (and after the conf set) or checkpoint work would be timed
+under the wrong arm. Do not hoist query construction out of the loop.
 """
 
 from __future__ import annotations

@@ -10,7 +10,7 @@ Fresh process per invocation = honest cold/warm structure; compare
 minima across invocations on the same host window.
 
 NOTE: query construction (CATALOG[name].fn) runs eager localCheckpoint
-jobs and must stay inside the timed window — see conf_ab.py.
+jobs and must stay inside the timed window — see confset_ab.py.
 """
 
 from __future__ import annotations
